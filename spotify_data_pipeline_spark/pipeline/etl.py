@@ -23,18 +23,28 @@ Deliberate deviations (SURVEY §7.3 "don't", documented):
   the reference, §4.2); ``gold_mode='append'`` restores reference
   behavior.
 
-Scale: ingestion parallelism = key partitions (each with its own token
-bucket); everything downstream is shuffle-free projections or key-local
-dedup; silver is date-partitioned so daily queries prune to one
-partition.
+Scale: ingestion parallelism = key partitions, each with its own token
+bucket (``num_partitions``; one fetch task per endpoint when unset, so
+``min_interval_s`` is the run's request interval); everything
+downstream is shuffle-free projections or key-local dedup; silver is
+date-partitioned so daily queries prune to one partition. A run does
+no repeated work: each endpoint is called once (the parsed fetch is
+persisted while both bronze tables of a stage are written from it,
+because recomputing it means calling the rate-limited API again);
+every zone is read with its declared schema, so no job infers one; and
+``transform`` and ``load`` write their five independent entities
+concurrently. A 100-artist day is about 20 Spark jobs.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from spotify_data_pipeline_spark import schemas
 from spotify_data_pipeline_spark.operators.dedup import exact_dedup
@@ -43,6 +53,7 @@ from spotify_data_pipeline_spark.sources.files import enforce_schema, read_json_
 from spotify_data_pipeline_spark.sources.rest import ApiClient, fetch_artists, fetch_paginated
 
 ENTITIES = ("artist", "album", "album_artists", "track", "track_artists")
+_GOLD_WRITE_MODES = {"idempotent": "overwrite", "append": "append"}
 
 
 @dataclass
@@ -71,6 +82,27 @@ def _sample_ids(id_pool: DataFrame, run_date: str, n: int) -> DataFrame:
 
 def _bronze_path(cfg: PipelineConfig, run_date: str, name: str) -> str:
     return f"{cfg.bronze}/{run_date}/{name}"
+
+
+def _for_each_entity(spark: SparkSession, write: Callable[[str], None]) -> None:
+    """Run ``write(entity)`` for every entity at once, one thread each.
+
+    The entities are independent lineages, so their jobs overlap on the
+    cores. Each task carries the caller's local properties (job group,
+    tags, scheduler pool) via ``inheritable_thread_target``, so
+    cancelling the caller's group cancels these jobs too. Each task is
+    wrapped on its own, so each thread gets its own copy: Spark SQL
+    writes the execution id into that copy, and a shared one would mix
+    up the threads' ids. The first failure, in ``ENTITIES`` order, is
+    raised after every write has finished."""
+    with ThreadPoolExecutor(len(ENTITIES)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), entity)
+            for entity in ENTITIES
+        ]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        raise errors[0]
 
 
 def extract_artists(
@@ -115,7 +147,10 @@ def extract_albums(
         page_size=cfg.album_page_size, min_interval_s=cfg.min_interval_s,
         num_partitions=cfg.num_partitions,
     )
+    # Both bronze tables come from this one fetch: keep it, so the second
+    # write does not page through the API again.
     parsed = raw.select(F.from_json("payload", schemas.RAW_ALBUM).alias("al")).select("al.*")
+    parsed.persist()
 
     # D1: per-run dedup by album_id. Duplicate payloads are identical
     # (same source record fetched via different artists), so an
@@ -148,8 +183,11 @@ def extract_albums(
         ["artist_id", "album_id"],
     )
 
-    albums.write.mode("overwrite").json(_bronze_path(cfg, run_date, "album"))
-    bridge.write.mode("overwrite").json(_bronze_path(cfg, run_date, "album_artists"))
+    try:
+        albums.write.mode("overwrite").json(_bronze_path(cfg, run_date, "album"))
+        bridge.write.mode("overwrite").json(_bronze_path(cfg, run_date, "album_artists"))
+    finally:
+        parsed.unpersist()
     return albums, bridge
 
 
@@ -164,10 +202,18 @@ def extract_tracks(
     tracks, per-run dedup, bridge build, write bronze."""
     # our bronze is JSONL (df.write.json), not the reference's
     # pretty-printed arrays — multiline=False so the scan is line-splittable
-    albums = read_json_blobs(spark, _bronze_path(cfg, run_date, "album"), multiline=False)
+    albums = read_json_blobs(
+        spark, _bronze_path(cfg, run_date, "album"), schemas.ALBUM, multiline=False
+    )
     album_ids = albums.select(F.col("album_id")).where(
         F.col("album_id").isNotNull()
     ).distinct()
+    if cfg.num_partitions is None:
+        # One fetch task, as for the album sample. AQE does not coalesce
+        # shuffles inside the cached plan below, so without this the
+        # fetch would run in spark.sql.shuffle.partitions tasks (the
+        # distinct's), each with its own token bucket.
+        album_ids = album_ids.coalesce(1)
 
     raw = fetch_paginated(
         album_ids, client, "album_tracks", key_col="album_id",
@@ -175,6 +221,8 @@ def extract_tracks(
         num_partitions=cfg.num_partitions,
     )
     parsed = raw.select(F.from_json("payload", schemas.RAW_TRACK).alias("tr")).select("tr.*")
+    # One fetch for both bronze tables, as in extract_albums.
+    parsed.persist()
 
     # D1: a track on multiple albums is kept once (no album_id column —
     # the reference's modeling gap, preserved)
@@ -202,21 +250,30 @@ def extract_tracks(
         ["track_id", "artist_id"],
     )
 
-    tracks.write.mode("overwrite").json(_bronze_path(cfg, run_date, "track"))
-    bridge.write.mode("overwrite").json(_bronze_path(cfg, run_date, "track_artists"))
+    try:
+        tracks.write.mode("overwrite").json(_bronze_path(cfg, run_date, "track"))
+        bridge.write.mode("overwrite").json(_bronze_path(cfg, run_date, "track_artists"))
+    finally:
+        parsed.unpersist()
     return tracks, bridge
 
 
 def transform(spark: SparkSession, run_date: str, cfg: PipelineConfig) -> None:
     """spotify_etl_v2.py:285-376 — bronze JSON → declared-schema
     projection (P5: select, order, cast, NULL-pad) → silver parquet.
-    The five entities are independent lineages; Spark runs them as
-    parallel jobs. Row→columnar happens in the parquet writer (the
-    reference's pandas/pyarrow hop, vectorized for free here)."""
-    for entity in ENTITIES:
-        df = read_json_blobs(spark, _bronze_path(cfg, run_date, entity), multiline=False)
-        out = enforce_schema(df, schemas.ENTITY_SCHEMAS[entity])
+    Bronze is read with each entity's declared schema, so no job infers
+    one; keys the JSON writer dropped (all-NULL columns) read as NULL.
+    The five entities are independent lineages, written concurrently
+    (``_for_each_entity``). Row→columnar happens in the parquet writer
+    (the reference's pandas/pyarrow hop, vectorized for free here)."""
+
+    def write(entity: str) -> None:
+        schema = schemas.ENTITY_SCHEMAS[entity]
+        df = read_json_blobs(spark, _bronze_path(cfg, run_date, entity), schema, multiline=False)
+        out = enforce_schema(df, schema)
         out.write.mode("overwrite").parquet(f"{cfg.silver}/{entity}/run_date={run_date}")
+
+    _for_each_entity(spark, write)
 
 
 def load(spark: SparkSession, run_date: str, cfg: PipelineConfig) -> None:
@@ -226,16 +283,22 @@ def load(spark: SparkSession, run_date: str, cfg: PipelineConfig) -> None:
     append-only accumulation across days AND double-appends on retry
     (S12/§4.2). Default here is idempotent per-date partition overwrite;
     ``gold_mode='append'`` reproduces reference accumulation semantics
-    (still per-run deduped, D3)."""
-    for entity in ENTITIES:
-        silver = spark.read.parquet(f"{cfg.silver}/{entity}/run_date={run_date}")
-        target = f"{cfg.gold}/{entity}/run_date={run_date}"
-        if cfg.gold_mode == "idempotent":
-            silver.write.mode("overwrite").parquet(target)
-        elif cfg.gold_mode == "append":
-            silver.write.mode("append").parquet(target)
-        else:
-            raise ValueError(f"unknown gold_mode {cfg.gold_mode!r}")
+    (still per-run deduped, D3). An unknown mode raises before anything
+    is written; the five entities are then copied concurrently. A failed
+    entity does not stop the others, so with ``gold_mode='append'`` a
+    failed load has appended every other entity, and a retry appends
+    those a second time."""
+    mode = _GOLD_WRITE_MODES.get(cfg.gold_mode)
+    if mode is None:
+        raise ValueError(f"unknown gold_mode {cfg.gold_mode!r}")
+
+    def write(entity: str) -> None:
+        silver = spark.read.schema(schemas.ENTITY_SCHEMAS[entity]).parquet(
+            f"{cfg.silver}/{entity}/run_date={run_date}"
+        )
+        silver.write.mode(mode).parquet(f"{cfg.gold}/{entity}/run_date={run_date}")
+
+    _for_each_entity(spark, write)
 
 
 def run_daily(

@@ -36,10 +36,13 @@ from spotify_data_pipeline_spark.gatesf import GATE_SF_DIR as SF_ORACLE  # noqa:
 
 @pytest.fixture(scope="session")
 def spark():
+    # A parity shard (tests/test_oracle_parity.py) runs beside the
+    # suite's own session, so it gets a smaller heap to fit next to it.
+    shard = os.environ.get("SPARK_GRAFT_PARITY_SHARD")
     s = get_spark(
         app_name="tests",
         master="local[4]",
         shuffle_partitions=8,
-        driver_memory="8g",
+        driver_memory="2g" if shard else "8g",
     )
     yield s

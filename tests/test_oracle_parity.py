@@ -8,8 +8,17 @@ which made the driver's single-process ``pytest tests/`` run time out
 at ~55% with zero failures. The module therefore self-shards: a plain
 ``pytest tests/`` run collects ONE orchestrator test per family that
 fans the parametrized tests out over ``SPARK_GRAFT_PARITY_SHARDS``
-(default 6) concurrent subprocess pytest runs — every query is still
-executed and compared, just in parallel sessions (local[4] each).
+concurrent subprocess pytest runs — every query is still executed and
+compared, just in parallel sessions (local[4] each). The default shard
+count is sized to the machine: one shard per two cores and per
+``_SHARD_MEM_BYTES`` of available memory, at most 6, and each shard's
+Spark driver gets a 2 GiB heap (the ``spark`` fixture in conftest.py
+sees ``SPARK_GRAFT_PARITY_SHARD``). A fixed 6 shards with the suite's
+8 GiB heap each, on a 4-core, 16 GiB host, filled memory within two
+minutes and stalled the whole run; even two such shards grew to 4.5 GiB
+resident each next to the suite's own 5.3 GiB JVM. Each shard also has
+a time limit, so a stalled shard fails this test instead of holding
+the suite.
 Setting ``SPARK_GRAFT_PARITY_SHARD=i/n`` runs slice ``i`` of ``n``
 in-process (what the subprocesses do; also the knob for running a
 single shard by hand)."""
@@ -33,7 +42,39 @@ _WITH_ORACLE = sorted(name for name, q in _QUERIES.items() if q.oracle)
 _ROWS_ONLY = sorted(name for name, q in _QUERIES.items() if not q.oracle)
 
 _SHARD = os.environ.get("SPARK_GRAFT_PARITY_SHARD", "")
-_N_SHARDS = max(1, int(os.environ.get("SPARK_GRAFT_PARITY_SHARDS", "6")))
+
+# Peak resident memory of one shard (its Spark JVM plus pytest and the
+# Python workers) at its 2 GiB heap, with headroom. The JVM's resident
+# size grows towards its heap limit whatever the data.
+_SHARD_MEM_BYTES = 4 << 30
+# Two shards took 313 s together on 4 cores; a limit of about three
+# times that still leaves the rest of the suite its time.
+_SHARD_TIMEOUT_S = 900
+
+
+def _available_memory_bytes() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _default_shards() -> int:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    n = (int(cpus) if cpus.isdigit() else os.cpu_count() or 1) // 2
+    mem = _available_memory_bytes()
+    if mem is not None:
+        n = min(n, mem // _SHARD_MEM_BYTES)
+    return max(1, min(6, n))
+
+
+_N_SHARDS = max(
+    1, int(os.environ.get("SPARK_GRAFT_PARITY_SHARDS", "0")) or _default_shards()
+)
 
 if _SHARD:
     _i, _n = (int(x) for x in _SHARD.split("/"))
@@ -61,22 +102,27 @@ else:
         env = os.environ.copy()
         env["SPARK_GRAFT_PARITY_SHARD"] = f"{i}/{_N_SHARDS}"
         # each shard is its own Spark session; local[4] per conftest
-        proc = subprocess.run(
-            [
-                sys.executable,
-                "-m",
-                "pytest",
-                os.path.abspath(__file__),
-                "-q",
-                "--no-header",
-                "-p",
-                "no:cacheprovider",
-            ],
-            capture_output=True,
-            text=True,
-            env=env,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        )
+        try:
+            proc = subprocess.run(
+                [
+                    sys.executable,
+                    "-m",
+                    "pytest",
+                    os.path.abspath(__file__),
+                    "-q",
+                    "--no-header",
+                    "-p",
+                    "no:cacheprovider",
+                ],
+                capture_output=True,
+                text=True,
+                env=env,
+                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                timeout=_SHARD_TIMEOUT_S,
+            )
+        except subprocess.TimeoutExpired as e:
+            out = e.stdout.decode() if isinstance(e.stdout, bytes) else e.stdout or ""
+            return i, -1, f"timed out after {_SHARD_TIMEOUT_S} s\n" + out[-2000:]
         tail = (proc.stdout or "")[-2000:] + (proc.stderr or "")[-500:]
         return i, proc.returncode, tail
 

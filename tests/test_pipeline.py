@@ -6,16 +6,25 @@ sample determinism across stages, idempotent re-runs, gold modes."""
 from __future__ import annotations
 
 import json
+import time
+import uuid
+from collections import Counter
+from dataclasses import dataclass
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from spotify_data_pipeline_spark import schemas
 from spotify_data_pipeline_spark.pipeline.etl import (
+    ENTITIES,
     PipelineConfig,
     extract_albums,
     extract_artists,
+    load,
     read_gold,
     run_daily,
+    transform,
 )
 from spotify_data_pipeline_spark.sources.rest import FakeSpotifyClient, fetch_paginated
 
@@ -184,6 +193,114 @@ def test_cross_day_duplicates_flow_to_gold(spark, client, id_pool, tmp_path):
         20240101,
         20240102,
     }
+
+
+def _counting_client(client: FakeSpotifyClient, log_path: str) -> FakeSpotifyClient:
+    """A copy of ``client`` that appends one line per API call, with its
+    ``time.monotonic()``, to ``log_path``. The calls run in Python
+    workers, so the count lives in a file; the class is defined here so
+    that cloudpickle ships it by value (workers cannot import this test
+    module)."""
+
+    @dataclass
+    class CountingClient(FakeSpotifyClient):
+        log_path: str = ""
+
+        def _log(self, endpoint: str, key: str, offset: int) -> None:
+            with open(self.log_path, "a") as fh:
+                fh.write(f"{endpoint}\t{key}\t{offset}\t{time.monotonic()}\n")
+
+        def artists(self, ids):
+            self._log("artists", ",".join(ids), 0)
+            return super().artists(ids)
+
+        def artist_albums(self, artist_id, limit, offset):
+            self._log("artist_albums", artist_id, offset)
+            return super().artist_albums(artist_id, limit, offset)
+
+        def album_tracks(self, album_id, limit, offset):
+            self._log("album_tracks", album_id, offset)
+            return super().album_tracks(album_id, limit, offset)
+
+    return CountingClient(
+        artists_by_id=client.artists_by_id,
+        albums_by_artist=client.albums_by_artist,
+        tracks_by_album=client.tracks_by_album,
+        log_path=log_path,
+    )
+
+
+def test_each_api_page_is_fetched_once(spark, client, id_pool, tmp_path):
+    """Both bronze tables of an extract stage come from one fetch: a run
+    requests every (endpoint, key, offset) exactly once, because a
+    second request is a second call against a rate-limited API. With
+    ``num_partitions`` unset, each paginated endpoint is fetched by one
+    task, so no two of its calls are closer than ``min_interval_s``. The
+    fetch is persisted only for the stage: the run leaves no cache."""
+    log = tmp_path / "calls.tsv"
+    counting = _counting_client(client, str(log))
+    cfg = _cfg(tmp_path, min_interval_s=0.02)
+    cfg.daily_sample = 40  # every artist: multi-page ar000 and shared al010
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keys())
+    run_daily(spark, counting, id_pool, "20240101", cfg)
+    assert set(jsc.getPersistentRDDs().keys()) == cached_before
+
+    lines = [line.split("\t") for line in log.read_text().splitlines()]
+    calls = Counter((e, k, o) for e, k, o, _ in lines)
+    assert {call: n for call, n in calls.items() if n != 1} == {}
+    album_pages = sorted(int(o) for e, k, o in calls if e == "artist_albums" and k == "ar000")
+    assert album_pages == [0, 2, 4]
+    albums = {a["id"] for items in client.albums_by_artist.values() for a in items}
+    assert {k for e, k, _ in calls if e == "album_tracks"} == albums
+
+    for endpoint in ("artist_albums", "album_tracks"):
+        times = sorted(float(t) for e, _, _, t in lines if e == endpoint)
+        gaps = [b - a for a, b in zip(times, times[1:])]
+        # the bucket spaces the calls; the margin covers the logging itself
+        assert min(gaps) > 0.015, endpoint
+
+
+def test_transform_pads_dropped_column_under_caller_group(spark, client, id_pool, tmp_path):
+    """When no sampled artist has ``followers``, Spark's JSON writer drops
+    the key from every bronze row. Silver still has the column, as
+    bigint, all NULL, in the declared column order. The concurrent
+    entity writes run under the caller's job group, so cancelling the
+    group reaches them."""
+    for rec in client.artists_by_id.values():
+        rec.pop("followers", None)
+    cfg = _cfg(tmp_path)
+    run_daily(spark, client, id_pool, "20240101", cfg)
+
+    bronze = spark.read.text(f"{cfg.bronze}/20240101/artist").collect()
+    assert bronze and all('"followers"' not in r.value for r in bronze)
+    artist = spark.read.parquet(f"{cfg.silver}/artist/run_date=20240101")
+    assert artist.columns == schemas.ARTIST.fieldNames()
+    assert dict(artist.dtypes)["followers"] == "bigint"
+    assert artist.count() == 10
+    assert artist.where(F.col("followers").isNotNull()).count() == 0
+
+    group = f"etl-{uuid.uuid4().hex}"
+    spark.sparkContext.setJobGroup(group, "transform under a job group")
+    try:
+        transform(spark, "20240101", cfg)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    # one parquet write job per entity, and no schema-inference job
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == len(ENTITIES)
+
+
+def test_entity_stage_failures_raise(spark, tmp_path):
+    """An unknown gold_mode raises before any entity job is submitted
+    (here there is no silver to read at all), and a failed concurrent
+    entity write raises out of its stage."""
+    cfg = _cfg(tmp_path, gold_mode="upsert")
+    with pytest.raises(ValueError, match="unknown gold_mode"):
+        load(spark, "20240101", cfg)
+    assert not (tmp_path / "gold").exists()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        transform(spark, "20240101", cfg)  # no bronze for this date
 
 
 def test_ensure_namespaces_idempotent(spark):
